@@ -77,7 +77,7 @@ object Explain {
         "artifact (docvals), never the corpus.",
       {
         val eng = new QueryEngine(spark, Seq(indexDir), localWandUpTo = 0L)
-        eng.topKFiltered("hash join", eng.prepareLangFacet("en"),
+        eng.topKFiltered("hash join", eng.prepareKeywordFacet("lang", "en"),
           Bm25.K, rounded = false, orMode = false)
       })
 

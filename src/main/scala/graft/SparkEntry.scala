@@ -32,14 +32,14 @@ object SparkEntry {
     * (scoring stats stay corpus-global; the gate applies inside the WAND
     * kernel, before top-k pruning). The allowed set comes from the
     * index's OWN keyword doc-values artifact
-    * (QueryEngine.prepareLangFacet) — facet prep never scans the
+    * (QueryEngine.prepareKeywordFacet) — facet prep never scans the
     * corpus, the 100 TB-honest shape. */
   def indexedTopKFiltered(spark: SparkSession, sfDir: String,
                           lang: String): DataFrame = {
     val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
     Index.build(spark, sfDir, indexDir)
     val eng = new QueryEngine(spark, Seq(indexDir))
-    eng.topKAllFiltered(eng.prepareLangFacet(lang), Bm25.K, orMode = false)
+    eng.topKAllFiltered(eng.prepareKeywordFacet("lang", lang), Bm25.K, orMode = false)
   }
 
   /** Repo-faceted retrieval: the SECOND keyword doc-values dimension
@@ -166,7 +166,7 @@ object SparkEntry {
     val eng = new QueryEngine(spark, Seq(indexDir))
     // facet vocabulary AND per-value gates from the index's own keyword
     // doc-values artifact — facet navigation never scans the corpus
-    val facets = eng.langFacetValues().map(l => l -> eng.prepareLangFacet(l))
+    val facets = eng.facetValues("lang").map(l => l -> eng.prepareKeywordFacet("lang", l))
     val rows = for {
       (qid, q) <- Bm25.QuerySet
       (lang, facet) <- facets
@@ -235,7 +235,7 @@ object SparkEntry {
     Index.build(spark, sfDir, indexDir,
       Index.BuildParams(storePositions = true))
     val eng = new QueryEngine(spark, Seq(indexDir))
-    eng.topKAllPhraseFiltered(eng.langFacetDocs(lang))
+    eng.topKAllPhraseFiltered(eng.keywordFacetDocs("lang", lang))
   }
 
   /** Unified search-box queries — ONE raw string per query mixing bare

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.{Analyzer, Codec}
 import graft.operators.Index._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import scala.collection.mutable
@@ -229,55 +229,98 @@ object QueryEngine {
   final case class ScoredDoc(docID: Long, score: Double)
   final case class RangedSeg(rangeId: Int, seg: PostingSegment)
 
-  /** Conjunctive block-max WAND over one docID range [lo, hi).
-    * `termsSorted` ascending by term — scores accumulate in that fixed
-    * order (rank-identity contract). Returns up to k (docID, score) with
-    * score EXACT; ordering/rounding applied by the caller. In `rounded`
-    * mode the heap competes on (round4(score), docID) so pruning matches
-    * the final rounded ranking. */
-  def wandRange(
-      segsByTerm: Map[String, Array[PostingSegment]],
-      termsSorted: Array[TermCtx],
-      lenOf: Long => Long,
-      avgdl: Double,
-      lo: Long, hi: Long, k: Int,
-      rounded: Boolean): Seq[ScoredDoc] =
-    conjunctiveRange(segsByTerm, termsSorted, lenOf, avgdl, lo, hi, k,
-      rounded, null, 0, null)
+  /** A fresh norms cursor per kernel call (the cursor is stateful); null
+    * for kernels that read no norms. */
+  private def cursorOf(norms: NormsTable): Long => Long =
+    if (norms == null) null else norms.cursor()
 
-  /** Exact-phrase variant: conjunctive WAND whose aligned candidates must
-    * additionally contain the phrase tokens at CONSECUTIVE positions
-    * (positional index required). Scoring is plain BM25 over the
-    * phrase's distinct terms — identical to the AND score, gated by the
-    * adjacency test, so all WAND bounds stay admissible (phrase matches
-    * ⊆ AND matches). */
-  def phraseRange(phraseSeq: Array[String])(
-      segsByTerm: Map[String, Array[PostingSegment]],
-      termsSorted: Array[TermCtx],
-      lenOf: Long => Long,
-      avgdl: Double,
-      lo: Long, hi: Long, k: Int,
-      rounded: Boolean): Seq[ScoredDoc] =
-    conjunctiveRange(segsByTerm, termsSorted, lenOf, avgdl, lo, hi, k,
-      rounded, Array(phraseSeq), 0, null)
+  /** A range task's segments grouped by term, each list minDoc-ordered. */
+  private def byTermOf(segs: Iterator[PostingSegment]): Map[String, Array[PostingSegment]] =
+    segs.toArray.groupBy(_.term).map { case (t, ss) => t -> ss.sortBy(_.minDoc) }
 
-  /** Proximity variant: conjunctive WAND whose aligned candidates must
-    * additionally contain ALL query terms within some window of `w`
-    * consecutive tokens (positional index required). Like the phrase
-    * gate, window matches ⊆ AND matches, so scoring and all pruning
-    * bounds are exactly the AND path's. */
-  def windowRange(terms: Array[String], w: Int)(
-      segsByTerm: Map[String, Array[PostingSegment]],
-      termsSorted: Array[TermCtx],
-      lenOf: Long => Long,
-      avgdl: Double,
-      lo: Long, hi: Long, k: Int,
-      rounded: Boolean): Seq[ScoredDoc] =
-    conjunctiveRange(segsByTerm, termsSorted, lenOf, avgdl, lo, hi, k,
-      rounded, Array(terms), w, null)
+  /** Sink of a scoring sweep: the threshold a candidate's padded
+    * block-max bound must reach to be worth scoring, and the scored
+    * candidates themselves (`offer` returns whether one was kept). A
+    * class, not a trait: while only [[TopK]] is loaded, the JIT can
+    * bind the per-candidate calls statically. */
+  private sealed abstract class Collector {
+    def threshold: Double
+    def offer(docID: Long, score: Double): Boolean
+  }
+
+  private object TopK {
+    final case class Entry(key: Double, docID: Long, score: Double)
+    // heap order: dequeue = the weakest under (key desc, docID asc)
+    val WeakestFirst: Ordering[Entry] = Ordering.fromLessThan[Entry]((a, b) =>
+      a.key < b.key || (a.key == b.key && a.docID > b.docID)).reverse
+  }
+
+  /** The bounded top-k collector every scoring kernel feeds — the
+    * threshold-before-heap filter of cache-efficient top-k aggregation.
+    * Candidates compete on (key desc, docID asc) with key = the EXACT
+    * score, or round4(score) in `rounded` mode so pruning matches the
+    * final rounded ranking; results keep the exact score, ordering and
+    * rounding are the caller's.
+    *
+    * Search-after cursor (pagination): a doc whose (key, docID) sorts AT
+    * OR BEFORE (afterKey desc, afterDoc asc) is on an earlier page and
+    * never enters. afterKey = NaN disables it (every comparison with NaN
+    * is false). Pruning stays admissible: the cursor only REMOVES
+    * candidates, and the threshold still derives from the heap of
+    * ELIGIBLE docs. */
+  private final class TopK(k: Int, rounded: Boolean,
+                           afterKey: Double = Double.NaN,
+                           afterDoc: Long = 0L) extends Collector {
+    import TopK._
+    private val heap = new mutable.PriorityQueue[Entry]()(WeakestFirst)
+    // r4 is a JBigDecimal round — hundreds of ns. Memoize the last
+    // (score → key) pair: corpora repeat scores heavily (few distinct
+    // (tf, len) combos), so most candidates that survive the fast reject
+    // hit the memo.
+    private var memoScore = Double.NaN
+    private var memoKey = Double.NaN
+
+    /** −∞ until k entries are held. Rounded: r4(s) ≤ s + 0.00005, so no
+      * score below (root key − 0.00005) can round up to the root. */
+    def threshold: Double =
+      if (heap.size < k) Double.NegativeInfinity
+      else if (rounded) heap.head.key - 0.00005
+      else heap.head.key
+
+    def offer(docID: Long, score: Double): Boolean = {
+      if (heap.size >= k) {
+        // fast reject on the EXACT score before any rounding: a candidate
+        // strictly below the root's band can never displace it, so the r4
+        // is skipped — the hot exit for dense terms. The rounded band is
+        // the 0.00005 of `threshold` widened by 1e-7: the double
+        // subtraction can land a hair above the exact decimal band edge,
+        // and widening only sends more candidates on to the exact test.
+        val w = heap.head
+        if (if (rounded) score < w.key - 0.0000501
+            else score < w.key || (score == w.key && docID > w.docID)) return false
+      }
+      val key =
+        if (!rounded) score
+        else if (score == memoScore) memoKey
+        else { memoScore = score; memoKey = r4(score); memoKey }
+      if (key > afterKey || (key == afterKey && docID <= afterDoc)) false
+      else if (heap.size < k) { heap.enqueue(Entry(key, docID, score)); true }
+      else {
+        val w = heap.head
+        val better = key > w.key || (key == w.key && docID < w.docID)
+        if (better) { heap.dequeue(); heap.enqueue(Entry(key, docID, score)) }
+        better
+      }
+    }
+
+    def results: Seq[ScoredDoc] =
+      heap.dequeueAll[Entry].map(e => ScoredDoc(e.docID, e.score))
+  }
 
   /** Kernel factory for every (AND/OR/phrase/window) × (gated/ungated)
-    * shape — one 8-arg function the physical paths dispatch on. `posGates`
+    * shape — one 8-arg function the physical paths dispatch on, returning
+    * up to k (docID, EXACT score) of one docID range [lo, hi) from a
+    * [[TopK]] collector. `posGates`
     * (may be null = no positional gate) carries one or more phrase token
     * sequences when `windowW == 0` (ALL must match — the unified search
     * front door composes several quoted phrases conjunctively), else a
@@ -295,14 +338,12 @@ object QueryEngine {
              afterKey: Double, afterDoc: Long, msm: Int):
       (Map[String, Array[PostingSegment]], Array[TermCtx],
        Long => Long, Double, Long, Long, Int, Boolean) => Seq[ScoredDoc] =
-    if (orMode)
-      (segs, ts, lenOf, av, lo, hi, k, rnd) =>
-        disjunctiveRange(segs, ts, lenOf, av, lo, hi, k, rnd, gate,
-          afterKey, afterDoc, msm)
-    else
-      (segs, ts, lenOf, av, lo, hi, k, rnd) =>
-        conjunctiveRange(segs, ts, lenOf, av, lo, hi, k, rnd, posGates,
-          windowW, gate, afterKey, afterDoc)
+    (segs, ts, lenOf, av, lo, hi, k, rnd) => {
+      val top = new TopK(k, rnd, afterKey, afterDoc)
+      if (orMode) disjunctiveRange(segs, ts, lenOf, av, lo, hi, gate, msm, top)
+      else conjunctiveRange(segs, ts, lenOf, av, lo, hi, posGates, windowW, gate, top)
+      top.results
+    }
 
   /** NOT-aware kernel factory: negated terms become ANTI-POSTING
     * iterators composed into the candidate gate — a candidate aligned by
@@ -488,7 +529,7 @@ object QueryEngine {
   }
 
   /** Grouped (field-collapsing) conjunctive top-n over one docID range:
-    * ONE postings pass maintaining an independent top-`n` heap PER GROUP
+    * ONE postings pass feeding an independent top-`n` [[TopK]] PER GROUP
     * — the one-pass collector a search service uses for "top n per
     * lang". Alignment sweep and scoring are exactly
     * [[conjunctiveRange]]'s (boosts ride [[TermCtx]] unchanged); the
@@ -497,7 +538,7 @@ object QueryEngine {
     * bound when the block's docs may belong to any group — grouped
     * pruning is inherently weaker than single-heap pruning, the honest
     * cost of the semantics. Candidates unmapped by the cursor (-1) are
-    * skipped before scoring. Returns (groupIdx, doc, EXACT score). */
+    * dropped. Returns (groupIdx, doc, EXACT score). */
   def groupedRange(
       segsByTerm: Map[String, Array[PostingSegment]],
       termsSorted: Array[TermCtx],
@@ -507,128 +548,19 @@ object QueryEngine {
       rounded: Boolean,
       groupOf: Long => Int,
       nGroups: Int): Seq[(Int, ScoredDoc)] = {
-    val n = termsSorted.length
-    if (n == 0 || nGroups == 0 ||
-        termsSorted.exists(tc => !segsByTerm.contains(tc.term)))
-      return Nil
-    val iters = termsSorted.map(tc =>
-      new PostingListIterator(segsByTerm(tc.term), avgdl))
-    iters.foreach(_.advance(lo))
-    if (iters.exists(_.exhausted)) return Nil
-    val order = termsSorted.indices.sortBy(i => termsSorted(i).df).toArray
-
-    final case class Entry(key: Double, docID: Long, score: Double)
-    val worseFirst = Ordering.fromLessThan[Entry]((a, b) =>
-      a.key < b.key || (a.key == b.key && a.docID > b.docID))
-    val heaps = Array.fill(nGroups)(
-      new mutable.PriorityQueue[Entry]()(worseFirst.reverse))
-    // last (score → key) memo — see [[conjunctiveRange]]
-    var memoScore = Double.NaN
-    var memoKey = Double.NaN
-    def keyOf(score: Double): Double =
-      if (!rounded) score
-      else if (score == memoScore) memoKey
-      else { memoScore = score; memoKey = r4(score); memoKey }
-    def thresholdOf(g: Int): Double =
-      if (heaps(g).size < nPerGroup) Double.NegativeInfinity
-      else if (rounded) heaps(g).head.key - 0.00005
-      else heaps(g).head.key
-    // global prune threshold = min over groups; −∞ while any heap fills
-    var notFull = nGroups
-    var minTh = Double.NegativeInfinity
-    def recomputeMinTh(): Unit =
-      if (notFull == 0) {
-        var m = Double.PositiveInfinity
-        var g = 0
-        while (g < nGroups) {
-          val t = thresholdOf(g); if (t < m) m = t; g += 1
+    val tops = Array.fill(nGroups)(new TopK(nPerGroup, rounded))
+    conjunctiveRange(segsByTerm, termsSorted, lenOf, avgdl, lo, hi, null, 0,
+      null, new Collector {
+        private var minTh = Double.NegativeInfinity
+        def threshold: Double = minTh
+        def offer(docID: Long, score: Double): Boolean = {
+          val g = groupOf(docID)
+          val kept = g >= 0 && tops(g).offer(docID, score)
+          if (kept) minTh = tops.iterator.map(_.threshold).min
+          kept
         }
-        minTh = m
-      }
-
-    var candidate = iters(order(0)).docID
-    var running = !iters(order(0)).exhausted
-    while (running && candidate < hi) {
-      var matched = true
-      var oi = 1
-      var bump = candidate
-      while (matched && oi < n) {
-        val it = iters(order(oi))
-        it.advance(candidate)
-        if (it.exhausted) { running = false; matched = false }
-        else if (it.docID != candidate) { bump = it.docID; matched = false }
-        oi += 1
-      }
-      if (!running) ()
-      else if (!matched) {
-        iters(order(0)).advance(bump)
-        if (iters(order(0)).exhausted) running = false
-        else candidate = iters(order(0)).docID
-      } else {
-        var ub = 0.0
-        var minLast = Long.MaxValue
-        var i = 0
-        while (i < n) {
-          ub += termsSorted(i).boost * (termsSorted(i).idf * iters(i).blockMaxQ)
-          if (iters(i).blockLastDoc < minLast) minLast = iters(i).blockLastDoc
-          i += 1
-        }
-        if (pad(ub) < minTh) {
-          val skipTo = math.max(candidate + 1, minLast + 1)
-          iters(order(0)).advance(skipTo)
-        } else {
-          val g = groupOf(candidate)
-          if (g >= 0) {
-            val len = lenOf(candidate)
-            val norm = 1.2 * (0.25 + 0.75 * len.toDouble / avgdl)
-            var score = 0.0
-            i = 0
-            while (i < n) {
-              val tfv = iters(i).tf.toDouble
-              score += termsSorted(i).boost *
-                (termsSorted(i).idf * (tfv * 2.2) / (tfv + norm))
-              i += 1
-            }
-            val h = heaps(g)
-            // exact-score fast reject before r4 — see [[conjunctiveRange]]
-            val rejectFast = h.size >= nPerGroup && {
-              val w = h.head
-              if (rounded) score < w.key - 0.0000501 // 1e-9 pad: the double
-              // subtraction can land a hair above the exact decimal
-              // band edge; widening the band keeps the reject sound
-              else score < w.key || (score == w.key && candidate > w.docID)
-            }
-            if (!rejectFast) {
-              val key = keyOf(score)
-              if (h.size < nPerGroup) {
-                h.enqueue(Entry(key, candidate, score))
-                if (h.size == nPerGroup) { notFull -= 1; recomputeMinTh() }
-              } else {
-                val w = h.head
-                if (key > w.key || (key == w.key && candidate < w.docID)) {
-                  h.dequeue(); h.enqueue(Entry(key, candidate, score))
-                  recomputeMinTh()
-                }
-              }
-            }
-          }
-          iters(order(0)).advance(candidate + 1)
-        }
-        if (iters(order(0)).exhausted) running = false
-        else candidate = iters(order(0)).docID
-      }
-    }
-    val out = Seq.newBuilder[(Int, ScoredDoc)]
-    var g = 0
-    while (g < nGroups) {
-      val h = heaps(g)
-      while (h.nonEmpty) {
-        val e = h.dequeue()
-        out += ((g, ScoredDoc(e.docID, e.score)))
-      }
-      g += 1
-    }
-    out.result()
+      })
+    tops.indices.flatMap(g => tops(g).results.map(g -> _))
   }
 
   /** Compose `base` (nullable) with anti-posting iterators over the
@@ -716,60 +648,34 @@ object QueryEngine {
     false
   }
 
+  /** Conjunctive block-max WAND over one docID range [lo, hi), feeding
+    * `top`. `termsSorted` ascending by term — scores accumulate in that
+    * fixed order (rank-identity contract). */
   private def conjunctiveRange(
       segsByTerm: Map[String, Array[PostingSegment]],
       termsSorted: Array[TermCtx],
       lenOf: Long => Long,
       avgdl: Double,
-      lo: Long, hi: Long, k: Int,
-      rounded: Boolean,
+      lo: Long, hi: Long,
       // positional gates (null = none): windowW == 0 → each entry is a
       // phrase token sequence and ALL must match; windowW > 0 → single
       // entry holding the proximity gate's distinct terms
       posGates: Array[Array[String]],
       windowW: Int,
       allowed: Long => Boolean,
-      // search-after cursor (pagination): a doc whose ranking key
-      // (rounded-or-exact score, docID) sorts AT OR BEFORE
-      // (afterKey desc, afterDoc asc) is on an earlier page and never
-      // enters the heap. afterKey = NaN disables (every comparison with
-      // NaN is false, so the skip test never fires). Pruning stays
-      // admissible: the cursor only REMOVES candidates, and the WAND
-      // threshold is still derived from the heap of ELIGIBLE docs.
-      afterKey: Double = Double.NaN,
-      afterDoc: Long = 0L): Seq[ScoredDoc] = {
+      top: Collector): Unit = {
     val n = termsSorted.length
     // containment, not size: segsByTerm may carry EXTRA entries (the
     // anti-posting lists of negated terms) beyond the scoring terms
     if (n == 0 || termsSorted.exists(tc => !segsByTerm.contains(tc.term)))
-      return Nil
+      return
     val needPos = posGates != null
     val iters = termsSorted.map(tc =>
       new PostingListIterator(segsByTerm(tc.term), avgdl, needPos))
     iters.foreach(_.advance(lo))
-    if (iters.exists(_.exhausted)) return Nil
+    if (iters.exists(_.exhausted)) return
     // driver order: rarest first minimizes advance() work
     val order = termsSorted.indices.sortBy(i => termsSorted(i).df).toArray
-
-    // heap of k best; root = weakest. Better = (key desc, docID asc).
-    final case class Entry(key: Double, docID: Long, score: Double)
-    val worseFirst = Ordering.fromLessThan[Entry]((a, b) =>
-      a.key < b.key || (a.key == b.key && a.docID > b.docID))
-    val heap = new mutable.PriorityQueue[Entry]()(worseFirst.reverse) // dequeue = worst
-    // r4 is a JBigDecimal round — hundreds of ns. Memoize the last
-    // (score → key) pair: synthetic/real corpora alike repeat scores
-    // heavily (few distinct (tf, len) combos), so most candidates that
-    // survive the fast-reject below hit the memo.
-    var memoScore = Double.NaN
-    var memoKey = Double.NaN
-    def keyOf(score: Double): Double =
-      if (!rounded) score
-      else if (score == memoScore) memoKey
-      else { memoScore = score; memoKey = r4(score); memoKey }
-    def threshold: Double =
-      if (heap.size < k) Double.NegativeInfinity
-      else if (rounded) heap.head.key - 0.00005
-      else heap.head.key
 
     var candidate = iters(order(0)).docID
     var running = !iters(order(0)).exhausted
@@ -800,7 +706,7 @@ object QueryEngine {
           if (iters(i).blockLastDoc < minLast) minLast = iters(i).blockLastDoc
           i += 1
         }
-        if (pad(ub) < threshold) {
+        if (pad(ub) < top.threshold) {
           // no doc in (candidate, minLast] can beat the threshold
           val skipTo = math.max(candidate + 1, minLast + 1)
           iters(order(0)).advance(skipTo)
@@ -828,66 +734,31 @@ object QueryEngine {
               (termsSorted(i).idf * (tfv * 2.2) / (tfv + norm))
             i += 1
           }
-          // fast reject on the EXACT score before any rounding: with a
-          // full heap, a candidate whose exact score is strictly below
-          // the rounded threshold band (rounded: |r4(s) − s| ≤ 0.00005;
-          // unrounded: key = s) can never displace the heap root — skip
-          // the r4 entirely. This is the hot exit for dense terms.
-          val rejectFast = heap.size >= k && {
-            val w = heap.head
-            if (rounded) score < w.key - 0.0000501 // 1e-9 pad: the double
-              // subtraction can land a hair above the exact decimal
-              // band edge; widening the band keeps the reject sound
-            else score < w.key || (score == w.key && candidate > w.docID)
-          }
-          if (!rejectFast) {
-            val key = keyOf(score)
-            // search-after gate: ranked at-or-before the cursor → earlier
-            // page, skip (both tests false when afterKey is NaN = no cursor)
-            if (!(key > afterKey || (key == afterKey && candidate <= afterDoc))) {
-              if (heap.size < k) heap.enqueue(Entry(key, candidate, score))
-              else {
-                val w = heap.head
-                if (key > w.key || (key == w.key && candidate < w.docID)) {
-                  heap.dequeue(); heap.enqueue(Entry(key, candidate, score))
-                }
-              }
-            }
-          }
+          top.offer(candidate, score)
           iters(order(0)).advance(candidate + 1)
         }
         if (iters(order(0)).exhausted) running = false
         else candidate = iters(order(0)).docID
       }
     }
-    val out = Seq.newBuilder[ScoredDoc]
-    while (heap.nonEmpty) {
-      val e = heap.dequeue()
-      out += ScoredDoc(e.docID, e.score)
-    }
-    out.result()
   }
 
-  /** Count matching docs in [lo, hi) WITHOUT scoring, norms lookups or
-    * materializing matches — the "total hits" aggregate of a search
-    * service. AND mode: alignment sweep led by `terms(0)` (callers on
-    * the scan path MUST pass the task-local driver term first — every
-    * AND match contains it, so per-task counts partition cleanly across
-    * tasks holding disjoint driver segments). OR mode: distinct-doc
-    * sort-merge over the present terms. Memory O(#terms); no top-k
-    * structure of any kind. */
-  def countRange(segsByTerm: Map[String, Array[PostingSegment]],
-                 terms: Array[String], avgdl: Double,
-                 lo: Long, hi: Long, orMode: Boolean,
-                 // optional candidate gate (facet counts); probed at
-                 // non-decreasing docIDs, so monotone-cursor gates work
-                 allowed: Long => Boolean = null): Long = {
+  /** The unscored match sweep behind the counting and sort-by-field
+    * kernels: calls `onMatch` with every docID in [lo, hi) matching the
+    * query, ascending. AND mode: alignment sweep led by `terms(0)`
+    * (callers on the scan path MUST pass the task-local driver term
+    * first — every AND match contains it, so per-task results partition
+    * cleanly across tasks holding disjoint driver segments). OR mode:
+    * distinct-doc sort-merge over the present terms. No scoring, no
+    * norms lookups, memory O(#terms). */
+  private def matchSweep(segsByTerm: Map[String, Array[PostingSegment]],
+                         terms: Array[String], avgdl: Double,
+                         lo: Long, hi: Long, orMode: Boolean)(
+                         onMatch: Long => Unit): Unit =
     if (orMode) {
       val iters = terms.filter(segsByTerm.contains)
         .map(t => new PostingListIterator(segsByTerm(t), avgdl))
-      if (iters.isEmpty) return 0L
       iters.foreach(_.advance(lo))
-      var count = 0L
       var running = true
       while (running) {
         var min = Long.MaxValue
@@ -899,7 +770,7 @@ object QueryEngine {
         }
         if (min == Long.MaxValue || min >= hi) running = false
         else {
-          if (allowed == null || allowed(min)) count += 1
+          onMatch(min)
           i = 0
           while (i < iters.length) {
             val it = iters(i)
@@ -908,16 +779,11 @@ object QueryEngine {
           }
         }
       }
-      count
-    } else {
-      if (terms.isEmpty || terms.exists(t => !segsByTerm.contains(t)))
-        return 0L
+    } else if (terms.nonEmpty && terms.forall(segsByTerm.contains)) {
       val iters = terms.map(t => new PostingListIterator(segsByTerm(t), avgdl))
       iters.foreach(_.advance(lo))
-      if (iters.exists(_.exhausted)) return 0L
-      var count = 0L
+      var running = !iters.exists(_.exhausted)
       var candidate = iters(0).docID
-      var running = true
       while (running && candidate < hi) {
         var matched = true
         var bump = candidate
@@ -931,7 +797,7 @@ object QueryEngine {
         }
         if (running) {
           if (matched) {
-            if (allowed == null || allowed(candidate)) count += 1
+            onMatch(candidate)
             iters(0).advance(candidate + 1)
           }
           else iters(0).advance(bump)
@@ -939,8 +805,23 @@ object QueryEngine {
           else candidate = iters(0).docID
         }
       }
-      count
     }
+
+  /** Count matching docs in [lo, hi) WITHOUT scoring, norms lookups or
+    * materializing matches — the "total hits" aggregate of a search
+    * service, over [[matchSweep]] (same `terms(0)` leader contract). No
+    * top-k structure of any kind. */
+  def countRange(segsByTerm: Map[String, Array[PostingSegment]],
+                 terms: Array[String], avgdl: Double,
+                 lo: Long, hi: Long, orMode: Boolean,
+                 // optional candidate gate (facet counts); probed at
+                 // non-decreasing docIDs, so monotone-cursor gates work
+                 allowed: Long => Boolean = null): Long = {
+    var count = 0L
+    matchSweep(segsByTerm, terms, avgdl, lo, hi, orMode) { d =>
+      if (allowed == null || allowed(d)) count += 1
+    }
+    count
   }
 
   /** Per-group match counts in [lo, hi) — [[countRange]]'s sweep with
@@ -957,74 +838,22 @@ object QueryEngine {
                        lo: Long, hi: Long, orMode: Boolean,
                        groupOf: Long => Int, nGroups: Int): Array[Long] = {
     val counts = new Array[Long](nGroups)
-    if (orMode) {
-      val iters = terms.filter(segsByTerm.contains)
-        .map(t => new PostingListIterator(segsByTerm(t), avgdl))
-      if (iters.isEmpty) return counts
-      iters.foreach(_.advance(lo))
-      var running = true
-      while (running) {
-        var min = Long.MaxValue
-        var i = 0
-        while (i < iters.length) {
-          val it = iters(i)
-          if (!it.exhausted && it.docID < min) min = it.docID
-          i += 1
-        }
-        if (min == Long.MaxValue || min >= hi) running = false
-        else {
-          val g = groupOf(min)
-          if (g >= 0) counts(g) += 1
-          i = 0
-          while (i < iters.length) {
-            val it = iters(i)
-            if (!it.exhausted && it.docID == min) it.advance(min + 1)
-            i += 1
-          }
-        }
-      }
-      counts
-    } else {
-      if (terms.isEmpty || terms.exists(t => !segsByTerm.contains(t)))
-        return counts
-      val iters = terms.map(t => new PostingListIterator(segsByTerm(t), avgdl))
-      iters.foreach(_.advance(lo))
-      if (iters.exists(_.exhausted)) return counts
-      var candidate = iters(0).docID
-      var running = true
-      while (running && candidate < hi) {
-        var matched = true
-        var bump = candidate
-        var i = 1
-        while (matched && i < iters.length) {
-          val it = iters(i)
-          it.advance(candidate)
-          if (it.exhausted) { running = false; matched = false }
-          else if (it.docID != candidate) { bump = it.docID; matched = false }
-          i += 1
-        }
-        if (running) {
-          if (matched) {
-            val g = groupOf(candidate)
-            if (g >= 0) counts(g) += 1
-            iters(0).advance(candidate + 1)
-          }
-          else iters(0).advance(bump)
-          if (iters(0).exhausted) running = false
-          else candidate = iters(0).docID
-        }
-      }
-      counts
+    matchSweep(segsByTerm, terms, avgdl, lo, hi, orMode) { d =>
+      val g = groupOf(d)
+      if (g >= 0) counts(g) += 1
     }
+    counts
   }
 
   /** Top-k matching docs in [lo, hi) ordered by a STATIC doc-values
     * field instead of relevance — the search-service `sort:` parameter
     * (newest-first, longest-first, …). Relevance is never computed:
-    * the sweep is [[countRange]]'s AND alignment (leader term first —
+    * the sweep is [[matchSweep]]'s AND alignment (leader term first —
     * scan-path callers pass the task-local driver term at index 0) and
     * each match offers `(fieldOf(docID), docID)` to ONE bounded k-heap
-    * ordered (field desc, docID asc). Without an index sorted on the
+    * ordered (field desc, docID asc) — an unrounded [[TopK]] keyed on
+    * the field value (exact as a double up to 2^53). Without an index
+    * sorted on the
     * field there is no admissible early termination — a doc's field
     * value is independent of its postings — so the honest cost is the
     * full intersection sweep plus an O(log k) heap offer per match,
@@ -1036,54 +865,11 @@ object QueryEngine {
                   terms: Array[String], avgdl: Double,
                   lo: Long, hi: Long, k: Int,
                   fieldOf: Long => Long): Seq[(Long, Long)] = {
-    if (terms.isEmpty || terms.exists(t => !segsByTerm.contains(t)))
-      return Nil
-    val iters = terms.map(t => new PostingListIterator(segsByTerm(t), avgdl))
-    iters.foreach(_.advance(lo))
-    if (iters.exists(_.exhausted)) return Nil
-    final case class E(v: Long, docID: Long)
-    val worseFirst = Ordering.fromLessThan[E]((a, b) =>
-      a.v < b.v || (a.v == b.v && a.docID > b.docID))
-    val heap = new mutable.PriorityQueue[E]()(worseFirst.reverse)
-    def offer(d: Long): Unit = {
-      val v = fieldOf(d)
-      if (heap.size < k) heap.enqueue(E(v, d))
-      else {
-        val w = heap.head
-        if (v > w.v || (v == w.v && d < w.docID)) {
-          heap.dequeue(); heap.enqueue(E(v, d))
-        }
-      }
+    val top = new TopK(k, rounded = false)
+    matchSweep(segsByTerm, terms, avgdl, lo, hi, orMode = false) { d =>
+      top.offer(d, fieldOf(d).toDouble)
     }
-    var candidate = iters(0).docID
-    var running = true
-    while (running && candidate < hi) {
-      var matched = true
-      var bump = candidate
-      var i = 1
-      while (matched && i < iters.length) {
-        val it = iters(i)
-        it.advance(candidate)
-        if (it.exhausted) { running = false; matched = false }
-        else if (it.docID != candidate) { bump = it.docID; matched = false }
-        i += 1
-      }
-      if (running) {
-        if (matched) {
-          offer(candidate)
-          iters(0).advance(candidate + 1)
-        }
-        else iters(0).advance(bump)
-        if (iters(0).exhausted) running = false
-        else candidate = iters(0).docID
-      }
-    }
-    val out = Seq.newBuilder[(Long, Long)]
-    while (heap.nonEmpty) {
-      val e = heap.dequeue()
-      out += ((e.docID, e.v))
-    }
-    out.result()
+    top.results.map(h => (h.docID, h.score.toLong))
   }
 
   /** Disjunctive (OR-semantics) WAND over one docID range [lo, hi):
@@ -1095,84 +881,33 @@ object QueryEngine {
     * Pruning = classic WAND pivot selection on per-term global upper
     * bounds (idf × max block quotient over the term's segments), plus a
     * block-max re-check at the pivot before full scoring. Both bounds are
-    * padded (admissibility insurance, same as the AND path). */
-  def wandOrRange(
-      segsByTerm: Map[String, Array[PostingSegment]],
-      termsSorted: Array[TermCtx],
-      lenOf: Long => Long,
-      avgdl: Double,
-      lo: Long, hi: Long, k: Int,
-      rounded: Boolean): Seq[ScoredDoc] =
-    disjunctiveRange(segsByTerm, termsSorted, lenOf, avgdl, lo, hi, k,
-      rounded, null)
-
+    * padded (admissibility insurance, same as the AND path). Feeds
+    * `top`, like [[conjunctiveRange]]. */
   private def disjunctiveRange(
       segsByTerm: Map[String, Array[PostingSegment]],
       termsSorted: Array[TermCtx],
       lenOf: Long => Long,
       avgdl: Double,
-      lo: Long, hi: Long, k: Int,
-      rounded: Boolean,
+      lo: Long, hi: Long,
       allowed: Long => Boolean,
-      // search-after cursor — same contract as [[conjunctiveRange]]'s
-      // (NaN = none; skip docs ranked at-or-before (afterKey, afterDoc))
-      afterKey: Double = Double.NaN,
-      afterDoc: Long = 0L,
       // minimum-should-match: score only docs matching ≥ msm distinct
       // query terms. Gating happens at the aligned pivot, AFTER the
       // pivot/block-max pruning decisions — msm matches ⊆ OR matches,
       // so every pruning bound stays admissible (same argument as the
       // phrase gate on the conjunctive side). msm = 1 is bit-identical
       // to plain OR (any aligned pivot matches ≥ 1 term by definition).
-      msm: Int = 1): Seq[ScoredDoc] = {
+      msm: Int,
+      top: Collector): Unit = {
     val present = termsSorted.filter(tc => segsByTerm.contains(tc.term))
     val n = present.length
     // fewer present terms than the floor → no doc can reach msm matches
-    if (n == 0 || n < msm) return Nil
+    if (n == 0 || n < msm) return
     val iters = present.map(tc => new PostingListIterator(segsByTerm(tc.term), avgdl))
     iters.foreach(_.advance(lo))
     // global admissible UB per term: idf × max block quotient anywhere
     val ub = present.map { tc =>
       tc.boost * (tc.idf * segsByTerm(tc.term).iterator.flatMap(s =>
         s.blockMaxTf.lazyZip(s.blockMinLen).map(Bm25.quotient(_, _, avgdl))).max)
-    }
-
-    final case class Entry(key: Double, docID: Long, score: Double)
-    val worseFirst = Ordering.fromLessThan[Entry]((a, b) =>
-      a.key < b.key || (a.key == b.key && a.docID > b.docID))
-    val heap = new mutable.PriorityQueue[Entry]()(worseFirst.reverse)
-    // last (score → key) memo + exact-score fast reject — the same two
-    // hot-path cuts as [[conjunctiveRange]] (r4 is a JBigDecimal round)
-    var memoScore = Double.NaN
-    var memoKey = Double.NaN
-    def keyOf(score: Double): Double =
-      if (!rounded) score
-      else if (score == memoScore) memoKey
-      else { memoScore = score; memoKey = r4(score); memoKey }
-    def threshold: Double =
-      if (heap.size < k) Double.NegativeInfinity
-      else if (rounded) heap.head.key - 0.00005
-      else heap.head.key
-    def offer(docID: Long, score: Double): Unit = {
-      if (heap.size >= k) {
-        val w = heap.head
-        val rejectFast =
-          if (rounded) score < w.key - 0.0000501 // 1e-9 pad: the double
-              // subtraction can land a hair above the exact decimal
-              // band edge; widening the band keeps the reject sound
-          else score < w.key || (score == w.key && docID > w.docID)
-        if (rejectFast) return
-      }
-      val key = keyOf(score)
-      // search-after gate (both tests false when afterKey is NaN)
-      if (key > afterKey || (key == afterKey && docID <= afterDoc)) return
-      if (heap.size < k) heap.enqueue(Entry(key, docID, score))
-      else {
-        val w = heap.head
-        if (key > w.key || (key == w.key && docID < w.docID)) {
-          heap.dequeue(); heap.enqueue(Entry(key, docID, score))
-        }
-      }
     }
 
     val order = Array.range(0, n) // indices sorted by current docID
@@ -1192,7 +927,7 @@ object QueryEngine {
       if (iters(order(0)).exhausted || iters(order(0)).docID >= hi) running = false
       else {
         // pivot: first prefix of docID-sorted iterators whose Σ UB beats θ
-        val th = threshold
+        val th = top.threshold
         var acc = 0.0
         var p = -1
         var pi = 0
@@ -1220,7 +955,7 @@ object QueryEngine {
                 bub += present(bi).boost * (present(bi).idf * it.blockMaxQ)
               bi += 1
             }
-            if ((heap.size >= k && pad(bub) < threshold) ||
+            if (pad(bub) < top.threshold ||
                 (allowed != null && !allowed(pivotDoc))) {
               // cannot enter top-k (or gated out by the filter): skip
               // past pivotDoc on matching iterators
@@ -1247,7 +982,7 @@ object QueryEngine {
                 } else score += 0.0
                 s += 1
               }
-              if (nMatched >= msm) offer(pivotDoc, score)
+              if (nMatched >= msm) top.offer(pivotDoc, score)
               var m = 0
               while (m < n) {
                 val it = iters(m)
@@ -1273,12 +1008,6 @@ object QueryEngine {
         }
       }
     }
-    val out = Seq.newBuilder[ScoredDoc]
-    while (heap.nonEmpty) {
-      val e = heap.dequeue()
-      out += ScoredDoc(e.docID, e.score)
-    }
-    out.result()
   }
 }
 
@@ -1645,34 +1374,15 @@ final class QueryEngine(
       .sortBy(_.term).toArray
     val totalDf = combinedDf.values.sum
     val hits: Seq[(Int, ScoredDoc)] =
-      if (!forceComposition && normsBc.isDefined && localWandUpTo > 0 &&
-          totalDf <= math.max(localWandUpTo, localParallelCap)) {
-        val byTerm = synchronized { localSegsFor(termCtx.map(_.term).toSeq, perDir) }
-        val norms = normsBc.get.value
-        val nG = groups.names.size
-        if (totalDf <= localWandUpTo)
-          QueryEngine.groupedRange(byTerm, termCtx, norms.cursor(), avgdl,
-            0L, Long.MaxValue, n, rounded,
-            QueryEngine.monotoneGroupCursor(groups.ids, groups.groups), nG)
-        else {
-          // pooled: shard the docID space exactly like the pooled WAND.
-          // Per-group top-n over disjoint ranges concatenates soundly
-          // (the global top-n per group is within the union of shard
-          // top-ns); the merge below takes it. Fresh group cursor per
-          // range — the galloping cursor is stateful.
-          val nr = math.max(1L, math.min(4L * localThreads,
-            math.max(localThreads.toLong, totalDf / 25_000L + 1))).toInt
-          val rsz = math.max(1L, (stats.maxDoc + nr) / nr)
-          (0 until nr).map { r =>
-            localPool.submit(
-              new java.util.concurrent.Callable[Seq[(Int, ScoredDoc)]] {
-                def call(): Seq[(Int, ScoredDoc)] =
-                  QueryEngine.groupedRange(byTerm, termCtx, norms.cursor(),
-                    avgdl, r * rsz, (r + 1L) * rsz, n, rounded,
-                    QueryEngine.monotoneGroupCursor(groups.ids, groups.groups),
-                    nG)
-              })
-          }.flatMap(_.get())
+      if (!forceComposition && resident(totalDf, needsNorms = true)) {
+        // per-group tops over disjoint pooled ranges concatenate soundly
+        // (the global top-n per group is within the union of shard
+        // top-ns); the merge below takes it. Fresh group cursor per
+        // range — the galloping cursor is stateful.
+        val (ids, gs, nG) = (groups.ids, groups.groups, groups.names.size)
+        runResident(perDir, totalDf, needsNorms = true) { (segs, lenOf, lo, hi) =>
+          QueryEngine.groupedRange(segs, termCtx, lenOf, avgdl, lo, hi, n,
+            rounded, QueryEngine.monotoneGroupCursor(ids, gs), nG).iterator
         }
       } else {
         groups.names.indices.flatMap { g =>
@@ -1829,6 +1539,183 @@ final class QueryEngine(
       // LRU touch
       localSegCache.remove(t).map { arr => localSegCache.put(t, arr); t -> arr }
     }.toMap
+  }
+
+  // ------------------------------------------------ physical-path executor
+
+  /** Per-range kernel of the executor: (segments by term, norms lookup —
+    * null when the query reads no norms, a fresh stateful cursor per
+    * call otherwise — and the docID range [lo, hi)) → rows. Must be
+    * serializable: the distributed paths ship it to tasks. */
+  private type RangeKernel[R] =
+    (Map[String, Array[PostingSegment]], Long => Long, Long, Long) => Iterator[R]
+
+  /** Can a query reading `totalDf` postings run on the driver — serially
+    * up to localWandUpTo, sharded on the pool up to the pooled ceiling?
+    * Kernels that read norms also need the broadcast norms table. */
+  private def resident(totalDf: Long, needsNorms: Boolean): Boolean =
+    localWandUpTo > 0 && totalDf <= math.max(localWandUpTo, localParallelCap) &&
+      (!needsNorms || normsBc.isDefined)
+
+  /** The driver-resident rungs of [[execute]] (zero Spark jobs once the
+    * query's segments are cached): the whole docID space in one kernel
+    * call up to localWandUpTo, else disjoint docID ranges on the driver
+    * pool — per-range rows and one caller merge, exactly like the
+    * distributed range path, so rank identity holds by construction.
+    * ~25k postings/range ≈ 10 ms of serial kernel per task, capped at
+    * 4× the pool so task-submit overhead stays trivial. */
+  private def runResident[R](perDir: Seq[Seq[DictEntry]], totalDf: Long,
+                             needsNorms: Boolean)(kernel: RangeKernel[R]): Seq[R] = {
+    val byTerm = synchronized {
+      localSegsFor(perDir.flatten.map(_.term).distinct, perDir)
+    }
+    val norms = if (needsNorms) normsBc.get.value else null
+    if (totalDf <= localWandUpTo)
+      kernel(byTerm, cursorOf(norms), 0L, Long.MaxValue).toSeq
+    else {
+      val nr = math.max(1L, math.min(4L * localThreads,
+        math.max(localThreads.toLong, totalDf / 25_000L + 1))).toInt
+      val rsz = math.max(1L, (stats.maxDoc + nr) / nr)
+      (0 until nr).map { r =>
+        localPool.submit(new java.util.concurrent.Callable[Seq[R]] {
+          def call(): Seq[R] =
+            kernel(byTerm, cursorOf(norms), r * rsz, (r + 1L) * rsz).toSeq
+        })
+      }.flatMap(_.get())
+    }
+  }
+
+  /** The ONE physical-path ladder of every posting-list query. `perDir`
+    * holds, per constituent index, the dictionary entries of every term
+    * the query reads (scoring, NOT and synonym-member terms); the
+    * highest-df `driverTerm` leads the scan path; `totalDf` sizes every
+    * shard. The path is picked once, cheapest first, and the caller
+    * merges the per-range rows (sort + take, sum, elementwise add):
+    *
+    *   1. LOCAL / POOLED ([[runResident]]) when the postings fit the
+    *      driver caps and `allowLocal` — rows in driver memory.
+    *   2. SCAN (zero per-query shuffle): the driver term is scanned
+    *      distributed straight off the partition/row-group-pruned
+    *      postings table; every other term's compressed segments are
+    *      collected (they are the RARER terms — bounded by
+    *      broadcastPostingsUpTo total postings) and broadcast. Each task
+    *      runs the kernel over its driver segments' docID ranges; ranges
+    *      are disjoint across tasks, so per-task rows merge in one
+    *      global TakeOrderedAndProject. A `gapOwning` query (OR, synonym
+    *      groups) also matches docs WITHOUT the driver term, so docID
+    *      ownership can't stay implicit in the driver postings: each task
+    *      derives explicit owned intervals ([[QueryEngine.ownedIntervals]])
+    *      from the GLOBAL range directory of the driver term's segments
+    *      ([[driverRangeDir]] — per-term metadata, cached across
+    *      queries), which tile the docID space exactly once.
+    *   3. RANGE (fallback; also the 10^12-scale plan for norm tables that
+    *      outgrow broadcast): shard the docID space ∝ posting volume
+    *      (~100k postings per task, capped at numRanges), shuffle segments
+    *      and, beyond the norms cap, cogroup norms to range tasks.
+    *
+    * Kernels that read norms take the SCAN path only with broadcast
+    * norms. Identical kernels and per-range semantics on every path make
+    * results path-identical (asserted in IndexQuerySpec). The row encoder
+    * is by-name: deriving a product encoder is a reflective, lock-taking
+    * call that the driver paths must not pay per query. */
+  private def execute[R](perDir: Seq[Seq[DictEntry]], driverTerm: String,
+                         totalDf: Long, needsNorms: Boolean,
+                         gapOwning: Boolean, allowLocal: Boolean = true)(
+      kernel: RangeKernel[R])(implicit enc: => Encoder[R]): Either[Seq[R], Dataset[R]] = {
+    if (allowLocal && resident(totalDf, needsNorms))
+      return Left(runResident(perDir, totalDf, needsNorms)(kernel))
+    implicit val rowEnc: Encoder[R] = enc
+    val bc = if (needsNorms) normsBc.orNull else null
+    val sideDf = totalDf - perDir.flatten.filter(_.term == driverTerm).map(_.df).sum
+    if ((bc != null || !needsNorms) && sideDf <= broadcastPostingsUpTo) {
+      val para = spark.sparkContext.defaultParallelism
+      val terms = perDir.flatten.map(_.term).distinct.sorted
+      val sideBc = sideBroadcast(driverTerm + "|" + terms.mkString(",")) {
+        indexDirs.zip(perDir).flatMap { case (dir, es) =>
+          val se = es.filter(_.term != driverTerm)
+          if (se.isEmpty) Nil
+          else segmentsOf(dir, se.map(_.term),
+            se.map(_.bucket).distinct).coalesce(para).collect().toSeq
+        }.groupBy(_.term).map { case (t, ss) => t -> ss.sortBy(_.minDoc).toArray }
+      }
+      val rangeDir = if (gapOwning) driverRangeDir(driverTerm, perDir) else null
+      // coalesce: the pruned read otherwise yields one micro-task per
+      // index file — scheduling dominates at interactive latency
+      val driverSegs = indexDirs.zip(perDir)
+        .filter(_._2.exists(_.term == driverTerm))
+        .map { case (dir, es) =>
+          segmentsOf(dir, Seq(driverTerm),
+            es.filter(_.term == driverTerm).map(_.bucket).distinct)
+        }
+        .reduce(_ union _)
+        .coalesce(para)
+      val dt = driverTerm
+      Right(driverSegs.mapPartitions { it =>
+        val mySegs = it.toArray
+        if (mySegs.isEmpty) Iterator.empty
+        else {
+          val byTerm = sideBc.value + (dt -> mySegs.sortBy(_.minDoc))
+          val norms = if (bc == null) null else bc.value
+          if (rangeDir == null) kernel(byTerm, cursorOf(norms), 0L, Long.MaxValue)
+          else
+            QueryEngine.ownedIntervals(mySegs, rangeDir._1, rangeDir._2)
+              .iterator.flatMap { case (lo, hi) => kernel(byTerm, cursorOf(norms), lo, hi) }
+        }
+      })
+    } else {
+      val ranges = math.max(1L, math.min(numRanges.toLong,
+        totalDf / 100_000L + 1)).toInt
+      val rs = math.max(1L, (stats.maxDoc + ranges) / ranges)
+      val ranged = indexDirs.zip(perDir)
+        .filter(_._2.nonEmpty)
+        .map { case (dir, es) =>
+          segmentsOf(dir, es.map(_.term), es.map(_.bucket).distinct)
+        }
+        .reduce(_ union _)
+        .flatMap(s => ((s.minDoc / rs).toInt to (s.maxDoc / rs).toInt)
+          .map(r => RangedSeg(r, s)))
+        .groupByKey(_.rangeId)
+      if (bc != null || !needsNorms)
+        Right(ranged.flatMapGroups { (rid, it) =>
+          val lo = rid.toLong * rs
+          kernel(QueryEngine.byTermOf(it.map(_.seg)),
+            cursorOf(if (bc == null) null else bc.value), lo, lo + rs)
+        })
+      else
+        Right(ranged.cogroup(allDocStats.groupByKey(d => (d.docID / rs).toInt)) {
+          (rid, segIt, dsIt) =>
+            val byTerm = QueryEngine.byTermOf(segIt.map(_.seg))
+            if (byTerm.isEmpty) Iterator.empty
+            else {
+              val norms = dsIt.map(d => d.docID -> d.len).toMap
+              val lo = rid.toLong * rs
+              kernel(byTerm, norms.apply, lo, lo + rs)
+            }
+        })
+    }
+  }
+
+  /** Global top-k over per-range (docID, EXACT score) rows — the merge of
+    * every scored top-k client. Driver rows sort into a LocalRelation
+    * (zero jobs); distributed rows (semi-joined with `postFilter` when
+    * given) feed one TakeOrderedAndProject. Order: (score desc, docID
+    * asc) on the mode's score. */
+  private def finishTopK(rows: Either[Seq[ScoredDoc], Dataset[ScoredDoc]],
+                         k: Int, rounded: Boolean,
+                         postFilter: DataFrame = null): DataFrame = rows match {
+    case Left(hits) =>
+      (if (rounded) hits.map(h => ScoredDoc(h.docID, r4(h.score))) else hits)
+        .sortBy(h => (-h.score, h.docID)).take(k)
+        .map(h => (h.docID, h.score)).toDF("docID", "score")
+    case Right(ds) =>
+      val gated =
+        if (postFilter == null) ds.toDF()
+        else ds.toDF().join(
+          postFilter.select(col("docID").cast("long").as("docID")).distinct(),
+          Seq("docID"), "left_semi")
+      (if (rounded) gated.withColumn("score", round(col("score"), 4)) else gated)
+        .orderBy(col("score").desc, col("docID").asc)
+        .limit(k)
   }
 
   /** Per constituent index: the query terms it knows, with ITS bucket
@@ -2212,13 +2099,6 @@ final class QueryEngine(
     }.reduce(_ unionAll _).orderBy(col("src"), col("rank"))
   }
 
-  /** Index metadata surface: ONE row
-    * (n_docs, n_terms, n_postings, max_df, avgdl) — what a search
-    * service's /stats endpoint reports, assembled from the index's own
-    * artifacts (stats + dictionary tables; no corpus scan, no posting
-    * decode). The oracle twin re-derives every value from the raw
-    * corpus, so this entry cross-gates the index METADATA against
-    * corpus truth. */
   /** (term, df) over the whole index — the background document-frequency
     * frame from the index's OWN dictionary artifact (summed across
     * constituent indexes; their docID ranges are disjoint). This is the
@@ -2230,11 +2110,15 @@ final class QueryEngine(
       .groupBy(col("term"))
       .agg(sum(col("df")).as("df"))
 
+  /** Index metadata surface: ONE row
+    * (n_docs, n_terms, n_postings, max_df, avgdl) — what a search
+    * service's /stats endpoint reports, assembled from the index's own
+    * artifacts (stats + dictionary tables; no corpus scan, no posting
+    * decode). The oracle twin re-derives every value from the raw
+    * corpus, so this entry cross-gates the index METADATA against
+    * corpus truth. */
   def indexStats(): DataFrame = {
-    val dict = indexDirs.map(Index.readDictionary(spark, _).toDF())
-      .reduce(_ unionAll _)
-      .groupBy(col("term"))
-      .agg(sum(col("df")).as("df"))
+    val dict = dictionaryDf()
       .agg(count(lit(1)).as("n_terms"), sum(col("df")).as("n_postings"),
         max(col("df")).as("max_df"))
       .head()
@@ -2272,7 +2156,6 @@ final class QueryEngine(
 
   private def countImpl(qtext: String, orMode: Boolean,
                         gateF: () => (Long => Boolean)): Long = {
-    def gate(): Long => Boolean = if (gateF == null) null else gateF()
     val terms = Analyzer.queryTerms(qtext)
     if (terms.isEmpty) return 0L
     val perDir = lookupPerDir(terms)
@@ -2284,90 +2167,14 @@ final class QueryEngine(
     val driverTerm = combinedDf.maxBy(_._2)._1
     // scan-path invariant: the task-local driver term LEADS the AND sweep
     val leaderFirst = (driverTerm +: presentTerms.filterNot(_ == driverTerm)).toArray
-    val totalDf = combinedDf.values.sum
     val av = stats.avgdl
-    if (localWandUpTo > 0 && totalDf <= math.max(localWandUpTo, localParallelCap)) {
-      val byTerm = synchronized { localSegsFor(presentTerms, perDir) }
-      if (totalDf <= localWandUpTo)
-        return QueryEngine.countRange(byTerm, leaderFirst, av,
-          0L, Long.MaxValue, orMode, gate())
-      // pooled count: shard the docID space exactly like the pooled WAND
-      // path (counts are additive over disjoint ranges); fresh gate per
-      // range — the monotone cursor is stateful
-      val nr = math.max(1L, math.min(4L * localThreads,
-        math.max(localThreads.toLong, totalDf / 25_000L + 1))).toInt
-      val rsz = math.max(1L, (stats.maxDoc + nr) / nr)
-      return (0 until nr).map { r =>
-        localPool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = QueryEngine.countRange(byTerm, leaderFirst, av,
-            r * rsz, (r + 1L) * rsz, orMode, gate())
-        })
-      }.map(_.get()).sum
-    }
-    val sideDfSum = combinedDf.filter(_._1 != driverTerm).values.sum
-    val om = orMode
-    val lf = leaderFirst
-    val dt = driverTerm
-    if (sideDfSum <= broadcastPostingsUpTo) {
-      val para = spark.sparkContext.defaultParallelism
-      val sideBc = sideBroadcast(dt + "|" + presentTerms.mkString(",")) {
-        indexDirs.zip(perDir).flatMap { case (dir, es) =>
-          val se = es.filter(_.term != dt)
-          if (se.isEmpty) Nil
-          else segmentsOf(dir, se.map(_.term),
-            se.map(_.bucket).distinct).coalesce(para).collect().toSeq
-        }.groupBy(_.term).map { case (t, ss) => t -> ss.sortBy(_.minDoc).toArray }
-      }
-      val rangeDir: (Array[Long], Array[Long]) =
-        if (om && presentTerms.length > 1) driverRangeDir(dt, perDir) else null
-      val driverSegs = indexDirs.zip(perDir)
-        .filter(_._2.exists(_.term == dt))
-        .map { case (dir, es) =>
-          segmentsOf(dir, Seq(dt), es.filter(_.term == dt).map(_.bucket).distinct)
-        }
-        .reduce(_ union _)
-        .coalesce(para)
-      val gf = gateF
-      driverSegs.mapPartitions { it =>
-        val mySegs = it.toArray
-        if (mySegs.isEmpty) Iterator.single(0L)
-        else {
-          val byTerm = sideBc.value + (dt -> mySegs.sortBy(_.minDoc))
-          if (rangeDir == null)
-            Iterator.single(QueryEngine.countRange(
-              byTerm, lf, av, 0L, Long.MaxValue, om,
-              if (gf == null) null else gf()))
-          else Iterator.single(
-            QueryEngine.ownedIntervals(mySegs, rangeDir._1, rangeDir._2)
-              .map { case (lo, hi) =>
-                QueryEngine.countRange(byTerm, lf, av, lo, hi, om,
-                  if (gf == null) null else gf()) }.sum)
-        }
-      }.reduce(_ + _)
-    } else {
-      // per-query segment shuffle — the honest fallback when the side
-      // terms outgrow the broadcast budget
-      val nr = math.max(1L, math.min(numRanges.toLong,
-        totalDf / 100_000L + 1)).toInt
-      val rs = math.max(1L, (stats.maxDoc + nr) / nr)
-      val segs = indexDirs.zip(perDir)
-        .filter(_._2.nonEmpty)
-        .map { case (dir, es) =>
-          segmentsOf(dir, es.map(_.term), es.map(_.bucket).distinct)
-        }
-        .reduce(_ union _)
-      val gf = gateF
-      segs.flatMap { s =>
-        ((s.minDoc / rs).toInt to (s.maxDoc / rs).toInt)
-          .map(r => RangedSeg(r, s))
-      }.groupByKey(_.rangeId).mapGroups { (rid, it) =>
-        val byTerm = it.map(_.seg).toArray.groupBy(_.term)
-          .map { case (t, ss) => t -> ss.sortBy(_.minDoc) }
-        val lo = rid.toLong * rs
-        QueryEngine.countRange(byTerm, lf, av, lo, lo + rs, om,
-          if (gf == null) null else gf())
-      }.reduce(_ + _)
-    }
+    // counts are additive over disjoint ranges; a fresh gate per range —
+    // the monotone cursor is stateful
+    execute[Long](perDir, driverTerm, combinedDf.values.sum, needsNorms = false,
+        gapOwning = orMode && presentTerms.length > 1) { (segs, _, lo, hi) =>
+      Iterator.single(QueryEngine.countRange(segs, leaderFirst, av, lo, hi,
+        orMode, if (gateF == null) null else gateF()))
+    }.fold(_.sum, _.collect().sum)
   }
 
   /** Driver-contract frame over the fixed query set: (query, n_docs,
@@ -2427,11 +2234,6 @@ final class QueryEngine(
       .select(col("value")).distinct().as[String].collect().sorted.toSeq
   }
 
-  /** `lang` convenience wrappers over the per-field resolver. */
-  def prepareLangFacet(lang: String): Facet = prepareKeywordFacet("lang", lang)
-  def langFacetDocs(lang: String): DataFrame = keywordFacetDocs("lang", lang)
-  def langFacetValues(): Seq[String] = facetValues("lang")
-
   /** Doc→length-bucket [[Groups]] for [[lenHistogram]]: bucket =
     * ⌊len/width⌋ over the index's own docStats doc-values column,
     * prepared ONCE and reused across queries (like a facet gate).
@@ -2470,32 +2272,17 @@ final class QueryEngine(
     val totalDf = combinedDf.values.sum
     val av = stats.avgdl
     val nG = groups.names.size
-    require(localWandUpTo > 0 &&
-      totalDf <= math.max(localWandUpTo, localParallelCap),
+    require(resident(totalDf, needsNorms = false),
       s"histogram kernel needs resident postings (total df $totalDf beyond " +
         "the pooled ceiling) — use lenHistogramRelational")
-    val byTerm = synchronized { localSegsFor(presentTerms, perDir) }
-    val counts: Array[Long] =
-      if (totalDf <= localWandUpTo)
-        QueryEngine.countGroupsRange(byTerm, leaderFirst, av,
-          0L, Long.MaxValue, orMode,
-          QueryEngine.monotoneGroupCursor(groups.ids, groups.groups), nG)
-      else {
-        // pooled: shard the docID space exactly like the pooled count;
-        // fresh group cursor per range — the galloping cursor is stateful
-        val nr = math.max(1L, math.min(4L * localThreads,
-          math.max(localThreads.toLong, totalDf / 25_000L + 1))).toInt
-        val rsz = math.max(1L, (stats.maxDoc + nr) / nr)
-        (0 until nr).map { r =>
-          localPool.submit(new java.util.concurrent.Callable[Array[Long]] {
-            def call(): Array[Long] = QueryEngine.countGroupsRange(
-              byTerm, leaderFirst, av, r * rsz, (r + 1L) * rsz, orMode,
-              QueryEngine.monotoneGroupCursor(groups.ids, groups.groups), nG)
-          })
-        }.map(_.get()).reduce { (a, b) =>
-          var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-        }
-      }
+    // bucket counts over disjoint ranges add elementwise; fresh group
+    // cursor per range — the galloping cursor is stateful
+    val counts = runResident(perDir, totalDf, needsNorms = false) { (segs, _, lo, hi) =>
+      Iterator.single(QueryEngine.countGroupsRange(segs, leaderFirst, av, lo, hi,
+        orMode, QueryEngine.monotoneGroupCursor(groups.ids, groups.groups), nG))
+    }.reduce { (a, b) =>
+      var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
+    }
     counts.zipWithIndex.collect { case (c, g) if c > 0 =>
       (groups.names(g).toInt, c) }.sortBy(_._1).toSeq
   }
@@ -2755,112 +2542,16 @@ final class QueryEngine(
     val presentTerms = combinedDf.keys.toSeq.sorted
     val driverTerm = combinedDf.maxBy(_._2)._1
     val leaderFirst = (driverTerm +: presentTerms.filterNot(_ == driverTerm)).toArray
-    val totalDf = combinedDf.values.sum
     val av = stats.avgdl
-    val kk = k
-
-    // driver-local / pooled fast path (postings + norms resident)
-    if (normsBc.isDefined && localWandUpTo > 0 &&
-        totalDf <= math.max(localWandUpTo, localParallelCap)) {
-      val byTerm = synchronized { localSegsFor(presentTerms, perDir) }
-      val norms = normsBc.get.value
-      val hits: Seq[(Long, Long)] =
-        if (totalDf <= localWandUpTo)
-          QueryEngine.sortedRange(byTerm, leaderFirst, av,
-            0L, Long.MaxValue, kk, norms.cursor())
-        else {
-          val nr = math.max(1L, math.min(4L * localThreads,
-            math.max(localThreads.toLong, totalDf / 25_000L + 1))).toInt
-          val rsz = math.max(1L, (stats.maxDoc + nr) / nr)
-          (0 until nr).map { r =>
-            localPool.submit(new java.util.concurrent.Callable[Seq[(Long, Long)]] {
-              def call(): Seq[(Long, Long)] =
-                QueryEngine.sortedRange(byTerm, leaderFirst, av,
-                  r * rsz, (r + 1L) * rsz, kk, norms.cursor())
-            })
-          }.flatMap(_.get())
-        }
-      return hits.sortBy(h => (-h._2, h._1)).take(k).toDF("docID", "len")
+    // AND matches always contain the driver term: no gap ownership
+    execute[(Long, Long)](perDir, driverTerm, combinedDf.values.sum,
+        needsNorms = true, gapOwning = false) { (segs, lenOf, lo, hi) =>
+      QueryEngine.sortedRange(segs, leaderFirst, av, lo, hi, k, lenOf).iterator
+    } match {
+      case Left(hits) => hits.sortBy(h => (-h._2, h._1)).take(k).toDF("docID", "len")
+      case Right(ds) =>
+        ds.toDF("docID", "len").orderBy(col("len").desc, col("docID").asc).limit(k)
     }
-
-    val sideDfSum = combinedDf.filter(_._1 != driverTerm).values.sum
-    val lf = leaderFirst
-    val dt = driverTerm
-    val local: org.apache.spark.sql.Dataset[(Long, Long)] =
-    if (normsBc.isDefined && sideDfSum <= broadcastPostingsUpTo) {
-      // zero-shuffle scan path: driver-term segments scanned distributed,
-      // side terms broadcast; AND matches always contain the driver term,
-      // so per-task results partition cleanly across disjoint segments
-      val bc = normsBc.get
-      val para = spark.sparkContext.defaultParallelism
-      val sideBc = sideBroadcast(dt + "|" + presentTerms.mkString(",")) {
-        indexDirs.zip(perDir).flatMap { case (dir, es) =>
-          val se = es.filter(_.term != dt)
-          if (se.isEmpty) Nil
-          else segmentsOf(dir, se.map(_.term),
-            se.map(_.bucket).distinct).coalesce(para).collect().toSeq
-        }.groupBy(_.term).map { case (t, ss) => t -> ss.sortBy(_.minDoc).toArray }
-      }
-      val driverSegs = indexDirs.zip(perDir)
-        .filter(_._2.exists(_.term == dt))
-        .map { case (dir, es) =>
-          segmentsOf(dir, Seq(dt), es.filter(_.term == dt).map(_.bucket).distinct)
-        }
-        .reduce(_ union _)
-        .coalesce(para)
-      driverSegs.mapPartitions { it =>
-        val mySegs = it.toArray
-        if (mySegs.isEmpty) Iterator.empty
-        else {
-          val byTerm = sideBc.value + (dt -> mySegs.sortBy(_.minDoc))
-          QueryEngine.sortedRange(byTerm, lf, av,
-            0L, Long.MaxValue, kk, bc.value.cursor()).iterator
-        }
-      }
-    } else {
-      // per-query segment shuffle; norms broadcast when available,
-      // cogrouped per docID range beyond the cap (the 10^12-doc shape)
-      val nr = math.max(1L, math.min(numRanges.toLong,
-        totalDf / 100_000L + 1)).toInt
-      val rs = math.max(1L, (stats.maxDoc + nr) / nr)
-      val segs = indexDirs.zip(perDir)
-        .filter(_._2.nonEmpty)
-        .map { case (dir, es) =>
-          segmentsOf(dir, es.map(_.term), es.map(_.bucket).distinct)
-        }
-        .reduce(_ union _)
-      val ranged = segs.flatMap { s =>
-        ((s.minDoc / rs).toInt to (s.maxDoc / rs).toInt)
-          .map(r => RangedSeg(r, s))
-      }
-      normsBc match {
-        case Some(bc) =>
-          ranged.groupByKey(_.rangeId).flatMapGroups { (rid, it) =>
-            val byTerm = it.map(_.seg).toArray.groupBy(_.term)
-              .map { case (t, ss) => t -> ss.sortBy(_.minDoc) }
-            val lo = rid.toLong * rs
-            QueryEngine.sortedRange(byTerm, lf, av,
-              lo, lo + rs, kk, bc.value.cursor()).iterator
-          }
-        case None =>
-          val normsByRange = allDocStats
-            .groupByKey(d => (d.docID / rs).toInt)
-          ranged.groupByKey(_.rangeId).cogroup(normsByRange) { (rid, segIt, dsIt) =>
-            val byTerm = segIt.map(_.seg).toArray.groupBy(_.term)
-              .map { case (t, ss) => t -> ss.sortBy(_.minDoc) }
-            if (byTerm.isEmpty) Iterator.empty
-            else {
-              val norms = dsIt.map(d => d.docID -> d.len).toMap
-              val lo = rid.toLong * rs
-              QueryEngine.sortedRange(byTerm, lf, av,
-                lo, lo + rs, kk, norms.apply).iterator
-            }
-          }
-      }
-    }
-    local.toDF("docID", "len")
-      .orderBy(col("len").desc, col("docID").asc)
-      .limit(k)
   }
 
   /** Driver-contract frame over the fixed query set: (query, rank,
@@ -2885,7 +2576,7 @@ final class QueryEngine(
     topKImpl(qtext, k, rounded, orMode = false)
 
   /** Disjunctive variant: docs matching ANY query term, scored over the
-    * terms they contain ([[QueryEngine.wandOrRange]]). */
+    * terms they contain (the disjunctive WAND of [[QueryEngine.kernel]]). */
   def topKOr(qtext: String, k: Int = Bm25.K, rounded: Boolean = false): DataFrame =
     topKImpl(qtext, k, rounded, orMode = true)
 
@@ -3176,17 +2867,9 @@ final class QueryEngine(
       .map { case (t, df) =>
         TermCtx(t, df, Bm25.idf(n, df), boosts.getOrElse(t, 1.0)) }
       .sortBy(_.term).toArray
-    // shard the docID space ∝ posting volume (~100k postings per task,
-    // capped at numRanges): a rare-term query runs in one task with no
-    // fan-out, a stop-word query spreads across the cluster
-    val ranges = math.max(1L,
-      math.min(numRanges.toLong,
-        (combinedDf.values.sum + negDfSum) / 100_000L + 1)).toInt
-    val rs = math.max(1L, (stats.maxDoc + ranges) / ranges)
     // postFilter mode disables per-range top-k pruning: a range's
     // filtered survivors may all rank below its unfiltered top k
     val kk = if (postFilter != null) Int.MaxValue else k
-    val rnd = rounded
     // gate FACTORY, not gate: the monotone-cursor gate is stateful, so
     // the kernel factory constructs a fresh one per range invocation
     val gateF: () => (Long => Boolean) = if (gateBc == null) null else {
@@ -3197,190 +2880,18 @@ final class QueryEngine(
     val afterKey =
       if (rounded && !afterScore.isNaN) QueryEngine.r4(afterScore)
       else afterScore
-    val wandFn: (Map[String, Array[PostingSegment]], Array[TermCtx],
-      Long => Long, Double, Long, Long, Int, Boolean) => Seq[ScoredDoc] =
-      QueryEngine.kernel(posGates, windowW, orMode, gateF, negPresent,
-        afterKey, afterDoc, msm)
-
-    // ---- driver-local fast path -------------------------------------
-    // All of the query's postings fit the driver cache and norms are
-    // resident → run the WAND kernel here and return a LocalRelation:
-    // zero jobs, zero scheduling latency. Identical kernel + identical
-    // final (rounded-score desc, docID asc) ordering as the distributed
-    // paths, so results are rank-identical by construction (asserted in
-    // IndexQuerySpec across all three paths). Works for AND, OR and
-    // phrase (all terms are co-located on the driver).
-    val totalDf = combinedDf.values.sum + negDfSum
-    if (postFilter == null && normsBc.isDefined && localWandUpTo > 0 &&
-        totalDf <= math.max(localWandUpTo, localParallelCap)) {
-      val byTerm = synchronized {
-        localSegsFor((termCtx.map(_.term) ++ negPresent.toSeq).distinct, perDirAll)
-      }
-      val norms = normsBc.get.value
-      val hits: Seq[ScoredDoc] =
-        if (totalDf <= localWandUpTo)
-          wandFn(byTerm, termCtx, norms.cursor(), avgdl,
-            0L, Long.MaxValue, k, rounded)
-        else {
-          // pooled kernel: shard the docID space exactly like the
-          // distributed range path (disjoint ranges, per-range top-k,
-          // one global merge) so rank identity holds by construction.
-          // ~25k postings/range ≈ 10 ms of serial kernel per task,
-          // capped at 4× the pool so task-submit overhead stays trivial
-          val nr = math.max(1L, math.min(4L * localThreads,
-            math.max(localThreads.toLong, totalDf / 25_000L + 1))).toInt
-          val rsz = math.max(1L, (stats.maxDoc + nr) / nr)
-          (0 until nr).map { r =>
-            localPool.submit(new java.util.concurrent.Callable[Seq[ScoredDoc]] {
-              def call(): Seq[ScoredDoc] =
-                wandFn(byTerm, termCtx, norms.cursor(), avgdl,
-                  r * rsz, (r + 1L) * rsz, kk, rnd)
-            })
-          }.flatMap(_.get())
-        }
-      val ordered =
-        (if (rounded) hits.map(h => ScoredDoc(h.docID, r4(h.score))) else hits)
-          .sortBy(h => (-h.score, h.docID)).take(k)
-      return ordered.map(h => (h.docID, h.score)).toDF("docID", "score")
-    }
-
-    // ---- physical path selection ------------------------------------
-    // SCAN path (default): zero per-query shuffle. The highest-df
-    // ("driver") term is scanned distributed straight off the
-    // partition/row-group-pruned postings table; every other query
-    // term's compressed segments are collected (they are the RARER
-    // terms — bounded by broadcastPostingsUpTo total postings) and
-    // broadcast. Each scan task runs WAND over its driver segments'
-    // docID ranges; ranges are disjoint across tasks, so the union of
-    // per-task top-k feeds one global TakeOrderedAndProject.
-    // Precondition: broadcast norms available.
-    //
-    // OR mode (multi-term) rides the SAME scan (VERDICT r3 #5 — it used
-    // to fall back to the per-query segment shuffle): disjunction must
-    // also score docs that DON'T contain the driver term, so docID-range
-    // ownership can't stay implicit in the driver postings. Each task
-    // instead derives explicit owned intervals from the GLOBAL range
-    // directory of the driver term's segments ([[driverRangeDir]] —
-    // per-term metadata, cached across queries): the owner of global
-    // segment i owns (maxDoc(i−1), maxDoc(i)]; the owner of segment 0
-    // also owns [0, minDoc(0)) and the owner of the last also owns
-    // (maxDoc(last), ∞). Segment ranges are pairwise disjoint (build
-    // invariant), so the intervals tile the docID space exactly once
-    // across tasks and the union of per-interval top-k stays a correct
-    // global candidate set.
-    //
-    // RANGE path (fallback; also the 10^12-scale plan for norm tables
-    // that outgrow broadcast): shard the docID space, shuffle segments
-    // (and, beyond the norms cap, cogroup norms) to range tasks.
-    val driverTerm = termCtx.maxBy(_.df).term
+    val wandFn = QueryEngine.kernel(posGates, windowW, orMode, gateF,
+      negPresent, afterKey, afterDoc, msm)
     // anti segments of negated terms travel exactly like scoring side
-    // segments (broadcast on the scan path, shuffled on the range path),
-    // so they count against the same broadcast budget — except a term
-    // that is ALSO the driver, whose segments already ride the scan
-    val sideDfSum = termCtx.filter(_.term != driverTerm).map(_.df).sum +
-      negPerDir.flatten.filter(_.term != driverTerm).map(_.df).sum
-    val scanPath = normsBc.isDefined && sideDfSum <= broadcastPostingsUpTo
-
-    val local: org.apache.spark.sql.Dataset[ScoredDoc] =
-    if (scanPath) {
-      val bc = normsBc.get
-      val para = spark.sparkContext.defaultParallelism
-      val sideBc = sideBroadcast(driverTerm + "|" + terms.sorted.mkString(",") +
-          (if (negPresent.isEmpty) "" else "|!" + negPresent.mkString(","))) {
-        indexDirs.zip(perDirAll).flatMap { case (dir, es) =>
-          val se = es.filter(_.term != driverTerm)
-          if (se.isEmpty) Nil
-          else segmentsOf(dir, se.map(_.term),
-            se.map(_.bucket).distinct).coalesce(para).collect().toSeq
-        }.groupBy(_.term).map { case (t, ss) => t -> ss.sortBy(_.minDoc).toArray }
-      }
-      // global driver-segment range directory — OR multi-term only (AND
-      // matches always contain the driver term, so ownership is implicit)
-      val rangeDir: (Array[Long], Array[Long]) =
-        if (orMode && termCtx.length > 1) driverRangeDir(driverTerm, perDir)
-        else null
-      // coalesce: the pruned read otherwise yields one micro-task per
-      // index file — scheduling dominates at interactive latency
-      val driverSegs = indexDirs.zip(perDir)
-        .filter(_._2.exists(_.term == driverTerm))
-        .map { case (dir, es) =>
-          segmentsOf(dir, Seq(driverTerm),
-            es.filter(_.term == driverTerm).map(_.bucket).distinct)
-        }
-        .reduce(_ union _)
-        .coalesce(para)
-      val tc = termCtx
-      val dt = driverTerm
-      val av = avgdl
-      val wf = wandFn
-      driverSegs.mapPartitions { it =>
-        val mySegs = it.toArray
-        if (mySegs.isEmpty) Iterator.empty
-        else {
-          val byTerm = sideBc.value + (dt -> mySegs.sortBy(_.minDoc))
-          val norms = bc.value
-          if (rangeDir == null)
-            wf(byTerm, tc, norms.cursor(), av, 0L, Long.MaxValue, kk, rnd).iterator
-          else
-            QueryEngine.ownedIntervals(mySegs, rangeDir._1, rangeDir._2)
-              .iterator.flatMap { case (lo, hi) =>
-                wf(byTerm, tc, norms.cursor(), av, lo, hi, kk, rnd) }
-        }
-      }
-    } else {
-      val segs = indexDirs.zip(perDirAll)
-        .filter(_._2.nonEmpty)
-        .map { case (dir, es) =>
-          segmentsOf(dir, es.map(_.term), es.map(_.bucket).distinct)
-        }
-        .reduce(_ union _)
-      val ranged = segs.flatMap { s =>
-        val loR = (s.minDoc / rs).toInt
-        val hiR = (s.maxDoc / rs).toInt
-        (loR to hiR).map(r => RangedSeg(r, s))
-      }
-
-      normsBc match {
-        case Some(bc) =>
-          ranged.groupByKey(_.rangeId).flatMapGroups { (rid, it) =>
-            val byTerm = it.map(_.seg).toArray.groupBy(_.term)
-              .map { case (t, ss) => t -> ss.sortBy(_.minDoc) }
-            val lo = rid.toLong * rs
-            val norms = bc.value
-            wandFn(byTerm, termCtx, norms.cursor(), avgdl, lo, lo + rs, kk, rnd)
-              .iterator
-          }
-        case None =>
-          val normsByRange = allDocStats
-            .groupByKey(d => (d.docID / rs).toInt)
-          ranged.groupByKey(_.rangeId).cogroup(normsByRange) { (rid, segIt, dsIt) =>
-            val byTerm = segIt.map(_.seg).toArray.groupBy(_.term)
-              .map { case (t, ss) => t -> ss.sortBy(_.minDoc) }
-            if (byTerm.isEmpty) Iterator.empty
-            else {
-              val norms = dsIt.map(d => d.docID -> d.len).toMap
-              val lo = rid.toLong * rs
-              wandFn(byTerm, termCtx, norms.apply, avgdl, lo, lo + rs, kk, rnd)
-                .iterator
-            }
-          }
-      }
-    }
-
-    val gated =
-      if (postFilter == null) local.toDF()
-      else local.toDF().join(
-        postFilter.select(col("docID").cast("long").as("docID")).distinct(),
-        Seq("docID"), "left_semi")
-    if (rounded)
-      gated
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("docID").asc)
-        .limit(k)
-    else
-      gated
-        .orderBy(col("score").desc, col("docID").asc)
-        .limit(k)
+    // segments (resident, broadcast or shuffled) and count toward the
+    // same caps; the driver is always a scoring term. The score-all
+    // postFilter plan never runs on the driver.
+    finishTopK(execute[ScoredDoc](perDirAll, termCtx.maxBy(_.df).term,
+        combinedDf.values.sum + negDfSum, needsNorms = true,
+        gapOwning = orMode && termCtx.length > 1,
+        allowLocal = postFilter == null) { (segs, lenOf, lo, hi) =>
+      wandFn(segs, termCtx, lenOf, avgdl, lo, hi, kk, rounded).iterator
+    }, k, rounded, postFilter)
   }
 
   /** Driver-contract shape over the whole fixed query set:
@@ -3433,152 +2944,19 @@ final class QueryEngine(
       .sortBy(_.term).toArray
     val wandFn = QueryEngine.kernel(null, 0, orMode = false,
       null, Array.empty[String])
-    val totalDf = resolved.map(_._4).sum
     val specs = resolved.map { case (nm, ms, dfG, _) => (nm, ms, dfG) }
-
-    // ---- driver-local / pooled path (same caps as topKImpl) ----------
-    if (normsBc.isDefined && localWandUpTo > 0 &&
-        totalDf <= math.max(localWandUpTo, localParallelCap)) {
-      val byReal = synchronized { localSegsFor(memberTerms, perDir) }
-      val norms = normsBc.get.value
-      val hits: Seq[ScoredDoc] =
-        if (totalDf <= localWandUpTo)
-          wandFn(QueryEngine.mergeAllGroups(specs, byReal, norms.cursor(),
-              avgdl, 0L, Long.MaxValue), termCtx,
-            norms.cursor(), avgdl, 0L, Long.MaxValue, k, rounded)
-        else {
-          val nr = math.max(1L, math.min(4L * localThreads,
-            math.max(localThreads.toLong, totalDf / 25_000L + 1))).toInt
-          val rsz = math.max(1L, (stats.maxDoc + nr) / nr)
-          (0 until nr).map { r =>
-            localPool.submit(new java.util.concurrent.Callable[Seq[ScoredDoc]] {
-              def call(): Seq[ScoredDoc] =
-                wandFn(QueryEngine.mergeAllGroups(specs, byReal, norms.cursor(),
-                    avgdl, r * rsz, (r + 1L) * rsz),
-                  termCtx, norms.cursor(), avgdl, r * rsz, (r + 1L) * rsz,
-                  k, rounded)
-            })
-          }.flatMap(_.get())
-        }
-      val ordered =
-        (if (rounded) hits.map(h => ScoredDoc(h.docID, QueryEngine.r4(h.score)))
-         else hits)
-          .sortBy(h => (-h.score, h.docID)).take(k)
-      return ordered.map(h => (h.docID, h.score)).toDF("docID", "score")
-    }
-
-    val tc = termCtx
-    val av = avgdl
-    val wf = wandFn
-    val sp = specs
-    val rnd = rounded
-
-    // ---- distributed SCAN path (zero per-query Exchange) -------------
-    // Mirrors the multi-term OR scan path (VERDICT r3 #5): the highest-
-    // df MEMBER is the driver; every other member's segments broadcast
-    // (shared cache key with plain queries — side segments are by TERM,
-    // so a synonym query warms the same entries); each task derives its
-    // owned docID intervals from the driver member's global range
-    // directory (gap coverage included — an AND match may contain the
-    // driver GROUP only via a non-driver member, exactly OR's problem)
-    // and merges each group's members WITHIN the interval before the
-    // ordinary conjunctive kernel.
-    val driverTerm = combinedDf.maxBy(_._2)._1
-    val sideDfSum = totalDf - combinedDf(driverTerm)
-    if (normsBc.isDefined && sideDfSum <= broadcastPostingsUpTo) {
-      val bc = normsBc.get
-      val para = spark.sparkContext.defaultParallelism
-      val sideBc = sideBroadcast(
-          driverTerm + "|" + memberTerms.sorted.mkString(",")) {
-        indexDirs.zip(perDir).flatMap { case (dir, es) =>
-          val se = es.filter(_.term != driverTerm)
-          if (se.isEmpty) Nil
-          else segmentsOf(dir, se.map(_.term),
-            se.map(_.bucket).distinct).coalesce(para).collect().toSeq
-        }.groupBy(_.term).map { case (t, ss) => t -> ss.sortBy(_.minDoc).toArray }
-      }
-      val rangeDir = driverRangeDir(driverTerm, perDir)
-      val driverSegs = indexDirs.zip(perDir)
-        .filter(_._2.exists(_.term == driverTerm))
-        .map { case (dir, es) =>
-          segmentsOf(dir, Seq(driverTerm),
-            es.filter(_.term == driverTerm).map(_.bucket).distinct)
-        }
-        .reduce(_ union _)
-        .coalesce(para)
-      val dt = driverTerm
-      val local = driverSegs.mapPartitions { it =>
-        val mySegs = it.toArray
-        if (mySegs.isEmpty) Iterator.empty
-        else {
-          val byReal = sideBc.value + (dt -> mySegs.sortBy(_.minDoc))
-          val norms = bc.value
-          QueryEngine.ownedIntervals(mySegs, rangeDir._1, rangeDir._2)
-            .iterator.flatMap { case (lo, hi) =>
-              wf(QueryEngine.mergeAllGroups(sp, byReal, norms.cursor(), av, lo, hi),
-                tc, norms.cursor(), av, lo, hi, k, rnd)
-            }
-        }
-      }
-      return finishTopK(local, k, rounded)
-    }
-
-    // ---- distributed range path (fallback beyond the broadcast cap) --
-    val ranges = math.max(1L, math.min(numRanges.toLong,
-      totalDf / 100_000L + 1)).toInt
-    val rs = math.max(1L, (stats.maxDoc + ranges) / ranges)
-    val segs = indexDirs.zip(perDir)
-      .filter(_._2.nonEmpty)
-      .map { case (dir, es) =>
-        segmentsOf(dir, es.map(_.term), es.map(_.bucket).distinct)
-      }
-      .reduce(_ union _)
-    val ranged = segs.flatMap { s =>
-      val loR = (s.minDoc / rs).toInt
-      val hiR = (s.maxDoc / rs).toInt
-      (loR to hiR).map(r => RangedSeg(r, s))
-    }
-    val local: org.apache.spark.sql.Dataset[ScoredDoc] = normsBc match {
-      case Some(bc) =>
-        ranged.groupByKey(_.rangeId).flatMapGroups { (rid, it) =>
-          val byReal = it.map(_.seg).toArray.groupBy(_.term)
-            .map { case (t, ss) => t -> ss.sortBy(_.minDoc) }
-          val lo = rid.toLong * rs
-          val norms = bc.value
-          wf(QueryEngine.mergeAllGroups(sp, byReal, norms.cursor(), av, lo, lo + rs),
-            tc, norms.cursor(), av, lo, lo + rs, k, rnd).iterator
-        }
-      case None =>
-        val normsByRange = allDocStats.groupByKey(d => (d.docID / rs).toInt)
-        ranged.groupByKey(_.rangeId).cogroup(normsByRange) { (rid, segIt, dsIt) =>
-          val segArr = segIt.map(_.seg).toArray
-          if (segArr.isEmpty) Iterator.empty
-          else {
-            val byReal = segArr.groupBy(_.term)
-              .map { case (t, ss) => t -> ss.sortBy(_.minDoc) }
-            val norms = dsIt.map(d => d.docID -> d.len).toMap
-            val lo = rid.toLong * rs
-            wf(QueryEngine.mergeAllGroups(sp, byReal, norms.apply, av, lo, lo + rs),
-              tc, norms.apply, av, lo, lo + rs, k, rnd).iterator
-          }
-        }
-    }
-    finishTopK(local, k, rounded)
+    // the highest-df MEMBER drives the scan (side segments are by TERM,
+    // so a synonym query warms the same cache entries as plain queries).
+    // Gap-owning: an AND match may contain the driver GROUP only via a
+    // non-driver member, exactly OR's problem. Every range merges each
+    // group's members WITHIN the range before the conjunctive kernel.
+    finishTopK(execute[ScoredDoc](perDir, combinedDf.maxBy(_._2)._1,
+        resolved.map(_._4).sum, needsNorms = true, gapOwning = true) {
+      (byReal, lenOf, lo, hi) =>
+        wandFn(QueryEngine.mergeAllGroups(specs, byReal, lenOf, avgdl, lo, hi),
+          termCtx, lenOf, avgdl, lo, hi, k, rounded).iterator
+    }, k, rounded)
   }
-
-  /** Global rounded top-k over a per-range candidate Dataset — the
-    * shared tail of the synonym physical paths. */
-  private def finishTopK(local: org.apache.spark.sql.Dataset[ScoredDoc],
-                         k: Int, rounded: Boolean): DataFrame =
-    if (rounded)
-      local.toDF()
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("docID").asc)
-        .limit(k)
-    else
-      local.toDF()
-        .orderBy(col("score").desc, col("docID").asc)
-        .limit(k)
 
   /** Driver-contract frame over the fixed SYNONYM query set. */
   def topKAllSyn(k: Int = Bm25.K): DataFrame =

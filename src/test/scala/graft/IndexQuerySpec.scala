@@ -1327,6 +1327,81 @@ class IndexQuerySpec extends AnyFunSuite {
     }
   }
 
+  test("executor: every client identical on local, pooled, scan and range engines (generated queries)") {
+    val posDir = "target/test-index-pos-sf0001"
+    posEngine // force the positional build
+    import spark.implicits._
+    val docs = Corpus.docs(spark, sfDir)
+    val even = docs.filter(col("docID") % 2 === 0).select(col("docID"))
+    /** A forced-path engine with its prepared facet and group handles. */
+    final class Eng(val e: QueryEngine) {
+      val facet = e.prepareFilter(even)
+      val lens = e.prepareLenGroups(Bm25.HistogramWidth)
+      val langs = e.prepareGroups(docs.select(col("docID"), col("lang").as("grp")))
+    }
+    val engines = Seq(
+      "local" -> new Eng(posEngine),
+      "pooled" -> new Eng(new QueryEngine(spark, Seq(posDir), localWandUpTo = 1L,
+        localWandThreads = 8, localWandParallelUpTo = 1_000_000L)),
+      "scan" -> new Eng(new QueryEngine(spark, Seq(posDir), localWandUpTo = 0L)),
+      "range" -> new Eng(new QueryEngine(spark, Seq(posDir),
+        broadcastPostingsUpTo = -1L, localWandUpTo = 0L)))
+    // seeded query set: bags of dictionary terms, plus token spans cut
+    // from the corpus so the phrase and window gates have live matches
+    val rnd = new scala.util.Random(20261017L)
+    val vocab = Index.readDictionary(spark, posDir).collect().map(_.term).sorted
+    val texts = docs.select(col("content")).as[String].collect()
+      .map(graft.functions.Analyzer.tokenize).filter(_.length >= 3)
+    def bag(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.length))).mkString(" ")
+    def span(n: Int) = {
+      val toks = texts(rnd.nextInt(texts.length))
+      val i = rnd.nextInt(toks.length - n + 1)
+      toks.slice(i, i + n).mkString(" ")
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Any] =
+      df.collect().map(_.toSeq).toSeq
+    // (client, query, local/pooled only, call)
+    val clients: Seq[(String, String, Boolean, Eng => Seq[Any])] =
+      (1 to 3).flatMap { _ =>
+        val (q2, q3, neg, ph, win) = (bag(2), bag(3), bag(1), span(2), span(3))
+        val syn = s"${bag(1)}|${bag(1)} ${bag(1)}"
+        val page1 = collectTopK(posEngine.topKOr(q2, 5, rounded = true))
+        val (cDoc, cScore) = page1.lastOption.getOrElse((0L, Double.NaN))
+        Seq[(String, String, Boolean, Eng => Seq[Any])](
+          ("topK AND", q2, false, x => rows(x.e.topK(q2))),
+          ("topK OR", q3, false, x => rows(x.e.topKOr(q3, rounded = true))),
+          ("topK NOT", s"$q2 -$neg", false, x => rows(x.e.topKNot(s"$q2 -$neg"))),
+          ("phrase", ph, false, x => rows(x.e.topKPhrase(ph, rounded = true))),
+          ("window", win, false, x => rows(x.e.topKWindow(win, 6))),
+          ("msm", q3, false, x => rows(x.e.topKMsm(q3, 2, rounded = true))),
+          ("search-after", q2, false, x => rows(x.e.topKAfter(q2, 5, cScore, cDoc,
+            rounded = true, orMode = true))),
+          ("filtered", q2, false, x => rows(x.e.topKFiltered(q2, x.facet, 10,
+            rounded = false, orMode = false))),
+          ("topKSyn", syn, false, x => rows(x.e.topKSyn(syn))),
+          ("countMatches", q3, false, x =>
+            Seq(x.e.countMatches(q3), x.e.countMatches(q3, orMode = true))),
+          ("countMatchesFiltered", q2, false, x =>
+            Seq(x.e.countMatchesFiltered(q2, x.facet),
+              x.e.countMatchesFiltered(q2, x.facet, orMode = true))),
+          ("lenHistogram", q2, true, x =>
+            x.e.lenHistogram(q2, x.lens) ++ x.e.lenHistogram(q3, x.lens, orMode = true)),
+          ("topKSortedByLen", q2, false, x => rows(x.e.topKSortedByLen(q2))),
+          ("searchGroupedTopK", q2, false, x => rows(x.e.searchGroupedTopK(q2, x.langs))))
+      }
+    val live = scala.collection.mutable.Set.empty[String]
+    for ((client, q, residentOnly, call) <- clients) {
+      val ref = call(engines.head._2)
+      if (ref.nonEmpty && ref != Seq(0L, 0L)) live += client
+      for ((name, eng) <- engines.tail if !residentOnly || name == "pooled")
+        assert(call(eng) == ref, s"$client '$q': $name differs from local")
+    }
+    // every client saw a non-empty answer on some generated query
+    assert(live == clients.map(_._1).toSet,
+      s"vacuous clients: ${clients.map(_._1).toSet -- live}")
+    engines.tail.foreach(_._2.e.close())
+  }
+
   test("monotoneGate: gallop cursor == binary search under non-decreasing probes") {
     val rnd = new scala.util.Random(42)
     val ids = Array.iterate(0L, 5000)(x => x + 1 + rnd.nextInt(20)).map(_ * 3)
@@ -1704,16 +1779,16 @@ class IndexQuerySpec extends AnyFunSuite {
       .filter(col("lang") === "en").select(col("docID"))
     for ((_, qtext) <- Bm25.QuerySet.take(4)) {
       assert(collectTopK(engine.topKFiltered(qtext,
-          engine.prepareLangFacet("en"), Bm25.K, rounded = false,
+          engine.prepareKeywordFacet("lang", "en"), Bm25.K, rounded = false,
           orMode = false)) ==
         collectTopK(engine.topKFiltered(qtext, corpusAllowed)), s"'$qtext'")
     }
     // the artifact's facet vocabulary is exactly the corpus's
     val corpusLangs = Corpus.docs(spark, sfDir).select(col("lang"))
       .distinct().collect().map(_.getString(0)).sorted.toSeq
-    assert(engine.langFacetValues() == corpusLangs)
+    assert(engine.facetValues("lang") == corpusLangs)
     assert(collectTopK(engine.topKFiltered("window",
-      engine.prepareLangFacet("zz"), Bm25.K, rounded = false,
+      engine.prepareKeywordFacet("lang", "zz"), Bm25.K, rounded = false,
       orMode = false)).isEmpty)
     // SECOND facet dimension (repo) through the same per-field resolver:
     // identical to the corpus-derived gate, vocabulary exact, unknown ∅
